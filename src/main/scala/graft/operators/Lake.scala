@@ -1030,14 +1030,6 @@ object Lake {
         * removed is skipped at replay (the file is gone; its stats
         * died with it). */
       statRestates: Seq[(String, Seq[ColStat])] = Seq.empty,
-      /** TRUE when the producer filtered the restates against the
-        * commit-time live set (the `ASF` tag — every current build;
-        * [[publish]] validates via the entries' F rows). FALSE for
-        * legacy `AS` lines, whose producers wrote the raw list: a
-        * PATH-LAZY replay cannot trust its approximate liveness
-        * predicate on those and validates the non-tail targets itself
-        * ([[applyDelta]], one bounded membership job). */
-      restatesFiltered: Boolean = true,
       /** CHECK constraints this commit ADDS (name → SQL predicate, `K`
         * lines) — see [[LakeState.checks]]. */
       checkAdds: Seq[(String, String)] = Seq.empty,
@@ -1094,7 +1086,7 @@ object Lake {
         * mid-rebase. The idempotent-replay guard for the streaming sink
         * and `txnAppId`/`txnVersion` batch writes. */
       txn: Option[(String, Long)] = None,
-      /** Stat restate (`AS`) lines this commit carries: per-file
+      /** Stat restate (`ASF`) lines this commit carries: per-file
         * per-column min/max replacements merged onto LIVE files — the
         * [[applyDelta]] semantics. A restate whose file an interposed
         * commit removed drops at rebase exactly as at replay. Used by
@@ -1113,7 +1105,8 @@ object Lake {
         * it. */
       bloomCols: Option[Seq[String]] = None)
 
-  private def fsRoot(spark: SparkSession, lakeDir: String): (FileSystem, Path) = {
+  /** The lake root's filesystem and fully-qualified path. */
+  private[graft] def fsRoot(spark: SparkSession, lakeDir: String): (FileSystem, Path) = {
     val p = new Path(lakeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     (fs, fs.makeQualified(p))
@@ -1334,8 +1327,7 @@ object Lake {
     val dvx = rec.dvRemoves.sorted.map { case (f, s) => s"X\t${enc(f)}\t${enc(s)}" }
     val cdc = rec.cdcFiles.sorted.map { case (p, t) => s"C\t${enc(p)}\t${enc(t)}" }
     val txn = rec.txn.toSeq.map { case (a, v) => s"T\t${enc(a)}\t$v" }
-    // `ASF` = filtered-at-commit restates (see DeltaRecord.restatesFiltered);
-    // the legacy `AS` tag parses but is never written by current builds
+    // `ASF` = restates the producer filtered against the commit-time live set
     val restates = rec.statRestates.sortBy(_._1).map { case (p, st) =>
       (Seq("ASF", enc(p)) ++ statsFields(st)).mkString("\t") }
     val kAdds = rec.checkAdds.sortBy(_._1).map { case (n, e) => s"K\t${enc(n)}\t${enc(e)}" }
@@ -1368,7 +1360,6 @@ object Lake {
     val kDrops = Seq.newBuilder[String]
     var layout: Option[Seq[String]] = None
     var bloomCols: Option[Seq[String]] = None
-    var legacyRestates = false
     lines.tail.foreach { l =>
       val f = l.split('\t').toSeq
       f.head match {
@@ -1383,9 +1374,6 @@ object Lake {
           added += ((p, parseStats(f.drop(2))))
           postImages += p
         case "ASF" => restates += ((dec(f(1)), parseStats(f.drop(2))))
-        case "AS" => // legacy: producer did not filter against the live set
-          restates += ((dec(f(1)), parseStats(f.drop(2))))
-          legacyRestates = true
         case "R" => removed += dec(f(1))
         case "D" => dvAdds += ((dec(f(1)), dec(f(2))))
         case "VD" => dvDetached += dec(f(1))
@@ -1405,8 +1393,7 @@ object Lake {
     DeltaRecord(version, action, schemaJson, added.result(), removed.result(),
       rewrites.result(), ts, dvAdds.result(), dvDetached = dvDetached.result(),
       cdcFiles = cdcFiles.result(), dvRemoves = dvRemoves.result(), txn = txn,
-      statRestates = restates.result(), restatesFiltered = !legacyRestates,
-      checkAdds = kAdds.result(),
+      statRestates = restates.result(), checkAdds = kAdds.result(),
       checkDrops = kDrops.result(), layout = layout,
       postImages = postImages.result(), bloomCols = bloomCols)
   }
@@ -2345,28 +2332,8 @@ object Lake {
     }
     val baseStats = (st.stats -- removed) ++ d.added.filter(_._2.nonEmpty).toMap
     // stat restates ([[analyzeStats]]) merge per column onto LIVE files;
-    // a restate whose file an interposed commit removed is skipped.
-    // The approximate path-lazy predicate above is sound only for
-    // producer-FILTERED restates (`ASF`): a LEGACY delta's raw list may
-    // name files dead BELOW the checkpoint, which no driver tail can
-    // see — validate those against the entries' F rows (one bounded
-    // membership job, only on the rare legacy-restate × path-lazy
-    // replay).
-    val restateSrc: Seq[(String, Seq[ColStat])] =
-      if (d.restatesFiltered || d.statRestates.isEmpty) d.statRestates
-      else postFiles match {
-        case dfl: DeferredFiles =>
-          val tailSet = dfl.tailAdded.toSet
-          val suspects = d.statRestates.map(_._1).filter(f => !tailSet(f))
-          if (suspects.isEmpty) d.statRestates
-          else {
-            val residents = residentsAmong(SparkSession.active,
-              dfl.entriesDir, suspects)
-            d.statRestates.filter(r => tailSet(r._1) || residents(r._1))
-          }
-        case _ => d.statRestates
-      }
-    val restated = restateSrc.filter(r => postFileSet(r._1))
+    // a restate whose file an interposed commit removed is skipped
+    val restated = d.statRestates.filter(r => postFileSet(r._1))
       .foldLeft(baseStats) { case (m, (f, st2)) =>
         m.updated(f, mergeStatCols(m.getOrElse(f, Seq.empty), st2))
       }
@@ -7073,7 +7040,7 @@ object Lake {
     * [[auditStaged]] device every write's stats capture uses — physical
     * column names, identical value rendering, so freshly-analyzed and
     * write-captured stats are indistinguishable to [[pruneByStats]]),
-    * committed as a METADATA-ONLY `analyze` delta carrying `AS` restate
+    * committed as a METADATA-ONLY `analyze` delta carrying `ASF` restate
     * lines: no data bytes move, the file list is untouched, the change
     * feed emits nothing. Raced commits rebase freely — a restate whose
     * file an interposed commit removed is dropped both at rebase and at

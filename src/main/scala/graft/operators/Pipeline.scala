@@ -712,22 +712,14 @@ object Pipeline {
     val base = Lake.adopt(spark, lakeDir)
     val lake = Lake.readState(spark, lakeDir, base)
     val t = broadcast(tombstones.select(col(tombIdCol).as("_del")).distinct())
-    // pass 1 (id + partition columns only): which partitions are hit
-    val affectedRows = Lake.collectScalar(
-      lake.join(t, col(lakeIdCol) === col("_del"), "left_semi")
-        .select(partitionCols.map(col): _*).distinct())
-    if (affectedRows.isEmpty) None
+    // pass 1 (id + partition columns only): which partitions are hit.
+    // The superseded pre-image files include those of fully-tombstoned
+    // partitions, which stage zero survivor rows and therefore vanish
+    // from the manifest (the silent-retention fix)
+    val removed = affectedPartitionFiles(base,
+      lake.join(t, col(lakeIdCol) === col("_del"), "left_semi"), partitionCols)
+    if (removed.isEmpty) None
     else {
-      val affectedDirs = affectedRows.map(Lake.partitionDir(partitionCols, _)).toSeq
-      // the pre-image files this commit supersedes — including those of
-      // fully-tombstoned partitions, which stage zero survivor rows and
-      // therefore vanish from the manifest (the silent-retention fix)
-      val removed = Lake.filesUnder(base.files, affectedDirs)
-      val orphanDirs = affectedDirs.filterNot(d => removed.exists(_.startsWith(d + "/")))
-      if (orphanDirs.nonEmpty)
-        throw new IllegalStateException(
-          s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
-            "manifest files although tombstones were found in them — refusing to stage")
       val affectedLake = Lake.readFiles(spark, lakeDir, base.schemaJson, removed, base.dvs)
       // pass 2 RIDES the survivor write: one left join (t is distinct,
       // so at most one match per lake row — the `_del IS NULL` filter is
@@ -870,11 +862,7 @@ object Pipeline {
         // recorded #bytes first (zero round-trips on a counted lake,
         // lazy-aware — a lazily-resolved state answers from one job over
         // the checkpoint entries); only pre-capture files pay a stat
-        lazy val hfsQ = {
-          val root = new org.apache.hadoop.fs.Path(lakeDir)
-          val hfs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          (hfs, hfs.makeQualified(root))
-        }
+        lazy val hfsQ = Lake.fsRoot(spark, lakeDir)
         val scoped = candidateSubtree
         val recorded = Lake.reservedPerFile(spark, base, scoped)
         val sizes = scoped.map { f =>
@@ -894,9 +882,7 @@ object Pipeline {
       // the rewrite layout passes the same shared gate as init/evolve —
       // a transform spec shadowing a schema column (or an identity
       // column spelled like a transform level) must refuse here too
-      Lake.validateLayout(partitionCols, Lake.visible(
-        org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]), "compactLake")
+      Lake.validateLayout(partitionCols, visibleSchema(base), "compactLake")
       val removed = Lake.filesUnder(candidateSubtree, affectedDirs).filter(rewritable)
       // reading WITH the deletion vectors applied is what MATERIALIZES
       // them: the compacted replacement files carry only surviving rows,
@@ -1698,6 +1684,46 @@ object Pipeline {
     updCount * perRow
   }
 
+  /** The lake's visible (user-facing) schema at `base`. */
+  private def visibleSchema(base: Lake.LakeState): org.apache.spark.sql.types.StructType =
+    Lake.visible(org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  /** The upserts' schema gate: the batch must carry exactly the lake's
+    * columns at their recorded types — a merge that drops or retypes a
+    * column is corruption, not evolution. */
+  private def requireLakeSchema(what: String,
+      lakeSchema: org.apache.spark.sql.types.StructType, batch: DataFrame): Unit = {
+    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
+    val uTypes = batch.schema.map(f => f.name -> f.dataType).toMap
+    require(lakeTypes == uTypes,
+      s"$what: updates schema must equal the lake schema exactly " +
+        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
+        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
+        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
+          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
+  }
+
+  /** The manifest files of every partition holding one of `matches`'
+    * rows (a semi-join of the lake, read for its partition columns only):
+    * the partition dirs come from ONE distinct pass, the files from
+    * driver-side prefix matching against the manifest. A matched dir
+    * owning no manifest file means the dir rendering disagrees with the
+    * writer's — the caller would silently keep the matched rows, so it
+    * refuses instead. */
+  private def affectedPartitionFiles(base: Lake.LakeState, matches: DataFrame,
+      partitionCols: Seq[String]): Seq[String] = {
+    val dirs = Lake.collectScalar(matches.select(partitionCols.map(col): _*).distinct())
+      .map(Lake.partitionDir(partitionCols, _)).toSeq
+    val files = Lake.filesUnder(base.files, dirs)
+    val orphanDirs = dirs.filterNot(d => files.exists(_.startsWith(d + "/")))
+    if (orphanDirs.nonEmpty)
+      throw new IllegalStateException(
+        s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
+          "manifest files although matching rows were found in them — refusing to stage")
+    files
+  }
+
   def mergeIntoLake(spark: SparkSession, lakeDir: String, updates: DataFrame,
       idCol: String = "doc_id",
       partitionCols: Seq[String] = Seq("split", "shard_id"),
@@ -1713,17 +1739,8 @@ object Pipeline {
     val upd = instUpd.localCheckpoint(true)
     val updCount = updAudit()
     if (updCount == 0) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
-    val uTypes = upd.schema.map(f => f.name -> f.dataType).toMap
-    require(lakeTypes == uTypes,
-      s"mergeIntoLake: updates schema must equal the lake schema exactly " +
-        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
-        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
-        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
-          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
+    val lakeSchema = visibleSchema(base)
+    requireLakeSchema("mergeIntoLake", lakeSchema, upd)
     val lake = Lake.readState(spark, lakeDir, base)
     // broadcast the id set only while it plausibly fits executor memory —
     // a corpus-wide re-scoring merge (updCount ~ corpus) must fall back
@@ -1736,16 +1753,8 @@ object Pipeline {
         broadcast(ids0)
       else ids0
     // pass 1 (id + partition columns only): which partitions hold a match
-    val matchedParts = Lake.collectScalar(
-      lake.join(u, col(idCol) === col("_mid"), "left_semi")
-        .select(partitionCols.map(col): _*).distinct())
-    val affectedDirs = matchedParts.map(Lake.partitionDir(partitionCols, _)).toSeq
-    val removed = Lake.filesUnder(base.files, affectedDirs)
-    val orphanDirs = affectedDirs.filterNot(d => removed.exists(_.startsWith(d + "/")))
-    if (orphanDirs.nonEmpty)
-      throw new IllegalStateException(
-        s"partition-dir rendering mismatch: ${orphanDirs.mkString(", ")} own no " +
-          "manifest files although matches were found in them — refusing to stage")
+    val removed = affectedPartitionFiles(base,
+      lake.join(u, col(idCol) === col("_mid"), "left_semi"), partitionCols)
     // stage A: survivors of the affected partitions (pre-image rewrites);
     // the REPLACED rows are written as a change-feed sidecar — the feed's
     // update_preimage half of the upsert (its update_postimage half is
@@ -1776,12 +1785,8 @@ object Pipeline {
         // matched ids for the stage-B split come from the
         // already-materialized sidecar (one small read), not a second
         // scan of the affected partitions
-        val cdcAbs = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          new org.apache.hadoop.fs.Path(
-            pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp),
-            cdcPath).toString
-        }
+        val cdcAbs = new org.apache.hadoop.fs.Path(Lake.fsRoot(spark, lakeDir)._2,
+          cdcPath).toString
         val idPhys = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
           .find(_.name == idCol).map(Lake.physicalName).getOrElse(idCol)
@@ -1853,39 +1858,8 @@ object Pipeline {
       Lake.pruneByStats(base, lakeIdCol,
         tombstones.schema(tombIdCol).dataType, bounds.get(0), bounds.get(1)),
       lakeIdCol, t.select(col("_del")), bounds.getLong(2))
-    if (candidates.isEmpty) return Lake.read(spark, lakeDir)
-    // one column-pruned pass over the candidates: the tombstoned rows'
-    // (file, pos) coordinates, with existing vectors already applied
-    val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-      candidates, base.dvs)
-    val matched = lineage.join(t, col(lakeIdCol) === col("_del"), "left_semi")
-    // ONE pass over the matched rows writes the change-feed sidecar (the
-    // deleted pre-image, row lineage riding along as extra columns) WITH
-    // the audit count riding it as an observed metric — the old separate
-    // count() was a second full scan of the candidates. The deletion
-    // vector then derives from the SIDECAR's read-back — the lake is
-    // never scanned a second time. No checks: deletes REMOVE rows.
-    val (instrumented, audit) = Lake.observedAudit(Map.empty, matched)
-    val cdcPath = Lake.stageCdc(spark, lakeDir, instrumented, Lake.layoutSpecsOf(base))
-    val expected = audit()
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-    }
-    if (expected == 0L) { // roll the empty (invisible) sidecar dir back
-      root.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-      return Lake.read(spark, lakeDir)
-    }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, stagedRows, files) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-    Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "delete", base.schemaJson,
-      Seq.empty, Seq.empty, stagedRows, expected,
-      dvAdds = files.map(f => f -> Seq(sidecar)).toMap,
-      cdcFiles = Seq((cdcPath, "delete"))))
-    Lake.read(spark, lakeDir)
+    tombstoneSparse(spark, lakeDir, base, candidates,
+      _.join(t, col(lakeIdCol) === col("_del"), "left_semi"))
   }
 
   /** [[deleteFromLakeSparse]] for an arbitrary PREDICATE instead of a
@@ -1905,33 +1879,50 @@ object Pipeline {
       predicate: org.apache.spark.sql.Column): DataFrame = {
     val base = Lake.adopt(spark, lakeDir)
     if (base.files.isEmpty) return Lake.read(spark, lakeDir)
-    val candidates = sparseWhereCandidates(spark, lakeDir, base, predicate)
+    tombstoneSparse(spark, lakeDir, base,
+      sparseWhereCandidates(spark, lakeDir, base, predicate), _.filter(predicate))
+  }
+
+  /** The one tombstone stage of both sparse deletes: ONE column-pruned
+    * pass over the candidate files (existing vectors already applied)
+    * picks the rows `matching` keeps and writes them as the change-feed
+    * sidecar (the deleted pre-image, row lineage riding along as extra
+    * columns), with the audit count riding that write as an observed
+    * metric. The deletion vector then derives from the SIDECAR's
+    * read-back — the lake is never scanned a second time. No checks:
+    * deletes REMOVE rows. Zero matches roll the empty sidecar back and
+    * commit nothing. */
+  private def tombstoneSparse(spark: SparkSession, lakeDir: String,
+      base: Lake.LakeState, candidates: Seq[String],
+      matching: DataFrame => DataFrame): DataFrame = {
     if (candidates.isEmpty) return Lake.read(spark, lakeDir)
     val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
       candidates, base.dvs)
-    val matched = lineage.filter(predicate)
-    // audit count rides the sidecar write (was a second candidate scan)
-    val (instrumented, audit) = Lake.observedAudit(Map.empty, matched)
+    val (instrumented, audit) = Lake.observedAudit(Map.empty, matching(lineage))
     val cdcPath = Lake.stageCdc(spark, lakeDir, instrumented, Lake.layoutSpecsOf(base))
     val expected = audit()
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-    }
     if (expected == 0L) { // roll the empty (invisible) sidecar dir back
-      root.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
+      val (fs, root) = Lake.fsRoot(spark, lakeDir)
+      fs.delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
       return Lake.read(spark, lakeDir)
     }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, stagedRows, files) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
+    val (_, stagedRows, dvAdds) = stageDvFromCdc(spark, lakeDir, base, cdcPath)
     Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "delete", base.schemaJson,
-      Seq.empty, Seq.empty, stagedRows, expected,
-      dvAdds = files.map(f => f -> Seq(sidecar)).toMap,
+      Seq.empty, Seq.empty, stagedRows, expected, dvAdds = dvAdds,
       cdcFiles = Seq((cdcPath, "delete"))))
     Lake.read(spark, lakeDir)
+  }
+
+  /** Stage the deletion vector of a just-staged change-feed sidecar's
+    * rows from its read-back's `(file, pos)` lineage: (the vector's
+    * sidecar dir, its row count, the attachment map for the commit). */
+  private def stageDvFromCdc(spark: SparkSession, lakeDir: String,
+      base: Lake.LakeState, cdcPath: String): (String, Long, Map[String, Seq[String]]) = {
+    val cdcAbs = new org.apache.hadoop.fs.Path(Lake.fsRoot(spark, lakeDir)._2, cdcPath)
+    val back = Lake.openStagedCdc(spark, cdcAbs.toString, base.schemaJson, withLineage = true)
+    val (sidecar, n, files) = Lake.stageDv(spark, lakeDir,
+      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
+    (sidecar, n, files.map(f => f -> Seq(sidecar)).toMap)
   }
 
   /** SPARSE row-level UPDATE — "SET col = expr WHERE pred" as ONE
@@ -1950,9 +1941,7 @@ object Pipeline {
       assignments: Map[String, org.apache.spark.sql.Column]): DataFrame = {
     val base = Lake.adopt(spark, lakeDir)
     if (base.files.isEmpty) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val lakeSchema = visibleSchema(base)
     val unknown = assignments.keySet.filterNot(lakeSchema.fieldNames.contains)
     require(unknown.isEmpty,
       s"updateLakeSparseWhere: SET names unknown column(s) ${unknown.mkString(", ")}")
@@ -1971,14 +1960,7 @@ object Pipeline {
     if (expected == 0L) return Lake.read(spark, lakeDir)
     // pre-image first (one pass): CDC delete sidecar, DV from its read-back
     val cdcPath = Lake.stageCdc(spark, lakeDir, matched, partitionCols)
-    val root = {
-      val pp = new org.apache.hadoop.fs.Path(lakeDir)
-      pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-    }
-    val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-    val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-    val (sidecar, dvRows, dvFiles) = Lake.stageDv(spark, lakeDir,
-      back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
+    val (sidecar, dvRows, dvAdds) = stageDvFromCdc(spark, lakeDir, base, cdcPath)
     // post-image: assignments applied over the matched pre-image rows,
     // cast back to the column's recorded type (SQL UPDATE semantics)
     val updated = matched.select(lakeSchema.map { f =>
@@ -1991,16 +1973,14 @@ object Pipeline {
     try updatedAudit()
     catch { case e: Throwable =>
       Lake.deleteFiles(spark, lakeDir, upStaged)
-      val fs2 = root.getFileSystem(spark.sessionState.newHadoopConf())
-      fs2.delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-      fs2.delete(new org.apache.hadoop.fs.Path(root, sidecar), true)
+      val (fs, root) = Lake.fsRoot(spark, lakeDir)
+      Seq(cdcPath, sidecar).foreach(d => fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
       throw e
     }
     val (upRows, upStats) = Lake.auditStaged(spark, lakeDir, base.schemaJson,
       upStaged, Seq.empty)
     Lake.publish(spark, Lake.StagedCommit(lakeDir, base, "update", base.schemaJson,
-      Seq.empty, upStaged, dvRows + upRows, expected * 2, upStats,
-      dvAdds = dvFiles.map(f => f -> Seq(sidecar)).toMap,
+      Seq.empty, upStaged, dvRows + upRows, expected * 2, upStats, dvAdds = dvAdds,
       cdcFiles = Seq((cdcPath, "update_preimage")),
       postImageFiles = upStaged.toSet))
     Lake.read(spark, lakeDir)
@@ -2019,9 +1999,7 @@ object Pipeline {
   private[graft] def sparseWhereCandidates(spark: SparkSession, lakeDir: String,
       base: Lake.LakeState,
       predicate: org.apache.spark.sql.Column): Seq[String] = {
-    val schema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val schema = visibleSchema(base)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val conds = empty.filter(predicate).queryExecution.analyzed.collect {
@@ -2034,128 +2012,32 @@ object Pipeline {
       Lake.pruneByStats(base, bounds), bounds, inLists)
   }
 
-  /** SPARSE row-level MERGE: the correction pass of [[mergeIntoLake]]
-    * WITHOUT the survivor rewrite. Matched pre-image rows are tombstoned
-    * by deletion vector (O(matched rows), not O(affected partitions));
-    * the update rows land as genuinely-new `A` files exactly as in the
-    * rewriting merge, so [[Lake.changesBetween]] and the CDC stream
-    * surface exactly the upserts. ONE atomic commit carries both. A 1%
-    * corpus-wide re-score therefore writes ~1% of the lake's bytes
-    * (upserts + sidecar) instead of rewriting every affected partition —
-    * the biggest write-amplification lever the lake has; compaction
-    * later folds the tombstones away in the background. */
+  /** SPARSE row-level MERGE — the upsert shape of [[mergeIntoLakeGeneral]]:
+    * every lake column of a matched row is SET from the source row, and
+    * an unmatched source row INSERTs whole. Matched pre-image rows
+    * tombstone by deletion vector (O(matched rows), not O(affected
+    * partitions), feeding the change feed as `update_preimage`), the
+    * post-images and inserts land as genuinely-new data files, ONE
+    * atomic commit carries both — a 1% corpus-wide re-score writes ~1%
+    * of the lake's bytes instead of rewriting every affected partition
+    * ([[mergeIntoLake]]); compaction later folds the tombstones away.
+    * Updates must carry the lake's exact schema; duplicate keys dedupe
+    * (last-writer-arbitrary), while null-key rows never match and each
+    * inserts. An empty or missing lake is a plain first ingest through
+    * [[appendToLake]] (the only use of `partitionCols`: an existing
+    * lake's committed layout routes the writes). */
   def mergeIntoLakeSparse(spark: SparkSession, lakeDir: String, updates: DataFrame,
       idCol: String = "doc_id",
       partitionCols: Seq[String] = Seq("split", "shard_id")): DataFrame = {
     val base = Lake.adopt(spark, lakeDir)
     if (base.files.isEmpty) // first-ever ingest: merge degenerates to append
       return appendToLake(spark, lakeDir, updates, idCol, partitionCols)
-    // the committed layout is authoritative for an existing lake —
-    // exactly as in [[appendToLake]]
-    val effectiveCols = Lake.layoutSpecsOf(base)
-    // count + CHECK sums + the id bounds for stats pruning ALL ride the
-    // eager checkpoint's own materialization (the batch is row-ADDING:
-    // upserts must satisfy the constraints) — the bounds used to be a
-    // second aggregate job over the just-checkpointed batch
-    val (instUpd, updAudit, updExtras) = Lake.observedAuditMetrics(base.checks,
-      updates.dropDuplicates(idCol),
-      Seq(min(col(idCol)).as("_gf_mn"), max(col(idCol)).as("_gf_mx")))
-    val upd = instUpd.localCheckpoint(true)
-    val updCount = updAudit()
-    if (updCount == 0) return Lake.read(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val lakeTypes = lakeSchema.map(f => f.name -> f.dataType).toMap
-    val uTypes = upd.schema.map(f => f.name -> f.dataType).toMap
-    require(lakeTypes == uTypes,
-      s"mergeIntoLakeSparse: updates schema must equal the lake schema exactly " +
-        s"(updates-only: ${(uTypes.keySet -- lakeTypes.keySet).mkString(", ")}; " +
-        s"lake-only: ${(lakeTypes.keySet -- uTypes.keySet).mkString(", ")}; " +
-        s"retyped: ${lakeTypes.keySet.intersect(uTypes.keySet)
-          .filter(c => lakeTypes(c) != uTypes(c)).mkString(", ")})")
-    val ids0 = upd.select(col(idCol).as("_mid")).distinct()
-    val u =
-      if (estimatedIdSetBytes(upd, idCol, updCount) <= MergeBroadcastMaxBytes)
-        broadcast(ids0)
-      else ids0
-    // tombstone the matched pre-image rows: stats-pruned candidates,
-    // then bloom-pruned for keys whose distribution defeats min/max
-    val bounds = updExtras()
-    val candidates =
-      if (bounds("_gf_mn") == null) Seq.empty[String]
-      else Lake.bloomPrune(spark, lakeDir, base,
-        Lake.pruneByStats(base, idCol, upd.schema(idCol).dataType,
-          bounds("_gf_mn"), bounds("_gf_mx")),
-        idCol, upd.select(col(idCol)), updCount)
-    val (dvAdds, dvRows, matchedExpected, cdcFiles, matchedIds) =
-      if (candidates.isEmpty)
-        (Map.empty[String, Seq[String]], 0L, 0L, Seq.empty[(String, String)],
-          None: Option[DataFrame])
-      else {
-        val lineage = Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-          candidates, base.dvs)
-        val matched = lineage.join(u, col(idCol) === col("_mid"), "left_semi")
-        // change-feed sidecar first (one lake pass) with the audit count
-        // riding it — the old separate count() was a second candidate
-        // scan; the deletion vector derives from the sidecar's own
-        // read-back. Matched pre-images ARE updates in upsert semantics
-        // (CDF parity). No checks here: pre-images are rows REMOVED.
-        val (instMatched, matchedAudit) = Lake.observedAudit(Map.empty, matched)
-        val cdcPath = Lake.stageCdc(spark, lakeDir, instMatched, effectiveCols)
-        val expected = matchedAudit()
-        val root = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-        }
-        if (expected == 0L) { // roll the empty (invisible) sidecar back
-          root.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(new org.apache.hadoop.fs.Path(root, cdcPath), true)
-          (Map.empty[String, Seq[String]], 0L, 0L, Seq.empty[(String, String)],
-            None: Option[DataFrame])
-        } else {
-          val cdcAbs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-          val back = Lake.openStagedCdc(spark, cdcAbs, base.schemaJson, withLineage = true)
-          val (sidecar, n, files) = Lake.stageDv(spark, lakeDir,
-            back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-          // matched ids come from the already-materialized sidecar
-          // (physical names on disk), not a re-scan of the candidates
-          val idPhys = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .find(_.name == idCol).map(Lake.physicalName).getOrElse(idCol)
-          (files.map(f => f -> Seq(sidecar)).toMap, n, expected,
-            Seq((cdcPath, "update_preimage")),
-            Some(back.select(col(idPhys).as("_lakeid"))))
-        }
-      }
-    // the upserts land as genuinely-new data files: POST-IMAGES (matched
-    // ids) and genuine inserts as SEPARATE files through ONE tagged
-    // write (the staging-only _gm_kind level strips on move) — the
-    // change feed tags update_postimage vs insert exactly at the same
-    // write cost as the untyped upsert
-    val updCols = upd.select(lakeSchema.map(f => col(f.name)): _*)
-    val tagged = matchedIds match {
-      case None =>
-        Map("ins" -> Lake.stageWrite(spark, lakeDir, updCols, effectiveCols))
-      case Some(ids) =>
-        Lake.stageWriteTagged(spark, lakeDir,
-          updCols.join(ids.distinct(), col(idCol) === col("_lakeid"), "left")
-            .withColumn("_gm_kind",
-              when(col("_lakeid").isNotNull, lit("post")).otherwise(lit("ins")))
-            .drop("_lakeid"),
-          "_gm_kind", effectiveCols)
-    }
-    val postStaged = tagged.getOrElse("post", Seq.empty)
-    val insStaged = tagged.getOrElse("ins", Seq.empty)
-    val upStaged = postStaged ++ insStaged
-    val (upRows, upStats) = Lake.auditStaged(spark, lakeDir, base.schemaJson,
-      upStaged, Seq(idCol))
-    Lake.publish(spark,
-      Lake.StagedCommit(lakeDir, base, "merge", base.schemaJson,
-        Seq.empty, upStaged, dvRows + upRows, matchedExpected + updCount,
-        upStats, dvAdds = dvAdds, cdcFiles = cdcFiles,
-        postImageFiles = postStaged.toSet))
-    Lake.read(spark, lakeDir)
+    val lakeSchema = visibleSchema(base)
+    requireLakeSchema("mergeIntoLakeSparse", lakeSchema, updates)
+    val upsert = MergeClause(None, delete = false,
+      lakeSchema.fieldNames.map(c => c -> col("_s_" + c)).toMap)
+    mergeIntoLakeGeneral(spark, lakeDir, updates, idCol, col("_s_" + idCol),
+      matched = Seq(upsert), notMatched = Seq(upsert), notMatchedBySource = Nil)
   }
 
   /** One clause of the GENERAL sparse merge ([[mergeIntoLakeGeneral]]):
@@ -2168,15 +2050,15 @@ object Pipeline {
   final case class MergeClause(condition: Option[org.apache.spark.sql.Column],
       delete: Boolean, sets: Map[String, org.apache.spark.sql.Column])
 
-  /** The FULL-GRAMMAR sparse MERGE: conditional `WHEN` clauses (first
-    * satisfied clause wins, the SQL order), split shapes (different
-    * UPDATE vs INSERT expressions), partial `SET`, and `WHEN NOT
-    * MATCHED BY SOURCE` — everything [[mergeIntoLakeSparse]]'s upsert
-    * fast path cannot express — landing as ONE sparse commit exactly
-    * like the simple shapes: every affected pre-image row tombstones by
-    * deletion vector (feeding the change feed as deletes), post-images
-    * and inserts land as genuinely-new data files, zero survivor files
-    * rewritten.
+  /** The sparse MERGE executor, full grammar: conditional `WHEN`
+    * clauses (first satisfied clause wins, the SQL order), split shapes
+    * (different UPDATE vs INSERT expressions), partial `SET`, and `WHEN
+    * NOT MATCHED BY SOURCE` — the plain upsert ([[mergeIntoLakeSparse]])
+    * is its one-UPDATE-one-INSERT shape — landing as ONE sparse commit:
+    * every affected pre-image row tombstones by deletion vector
+    * (feeding the change feed as `delete` or `update_preimage`),
+    * post-images and inserts land as genuinely-new data files, zero
+    * survivor files rewritten.
     *
     * Execution is ONE full-outer join between the (stats-pruned)
     * target lineage read and the key-deduped source: matched rows
@@ -2190,18 +2072,16 @@ object Pipeline {
     * definition — the same honest full-scan Delta prices that clause
     * at. Duplicate source keys dedupe (last-writer-arbitrary) rather
     * than raising ANSI MERGE's cardinality error — the documented
-    * divergence shared with [[mergeIntoLakeSparse]]; null-key source
-    * rows are NOT deduped (null never matches — each inserts). CHECK
-    * constraints
-    * gate the added rows exactly like every other row-adding path. */
+    * divergence; null-key source rows are NOT deduped (null never
+    * matches — each inserts). CHECK constraints gate the added rows
+    * exactly like every other row-adding path. */
   def mergeIntoLakeGeneral(spark: SparkSession, lakeDir: String,
       source: DataFrame, idCol: String, srcKey: org.apache.spark.sql.Column,
       matched: Seq[MergeClause], notMatched: Seq[MergeClause],
       notMatchedBySource: Seq[MergeClause]): DataFrame = {
-    import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val base = Lake.adopt(spark, lakeDir)
-    val lakeSchema = Lake.visible(
-      DataType.fromJson(base.schemaJson).asInstanceOf[StructType])
+    val lakeSchema = visibleSchema(base)
     require(lakeSchema.fieldNames.contains(idCol),
       s"mergeIntoLakeGeneral: merge key '$idCol' is not a lake column")
     val partitionCols = Lake.layoutSpecsOf(base)
@@ -2324,10 +2204,6 @@ object Pipeline {
       if (tombExpected == 0L)
         (Map.empty[String, Seq[String]], 0L, Seq.empty[(String, String)])
       else {
-        val root = {
-          val pp = new org.apache.hadoop.fs.Path(lakeDir)
-          pp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(pp)
-        }
         val pre = joined.filter(tombCond).select(
           lakeSchema.fieldNames.toSeq.map(c => col("_t_" + c).as(c))
             ++ Seq(col("_gf_file"), col("_gf_pos"),
@@ -2338,11 +2214,8 @@ object Pipeline {
         val staged =
           Seq(("delete", tombDel), ("update_preimage", tombUpd))
             .collect { case (t, n) if n > 0L => (s"$cdcPath/_gm_ct=$t", t) }
-        val abs = new org.apache.hadoop.fs.Path(root, cdcPath).toString
-        val back = Lake.openStagedCdc(spark, abs, base.schemaJson, withLineage = true)
-        val (sidecar, n, files) = Lake.stageDv(spark, lakeDir,
-          back.select(col("_gf_file").as("file"), col("_gf_pos").as("pos")))
-        (files.map(f => f -> Seq(sidecar)).toMap, n, staged)
+        val (_, n, dvs) = stageDvFromCdc(spark, lakeDir, base, cdcPath)
+        (dvs, n, staged)
       }
     // post-images and inserts: per clause, each lake column evaluates its
     // SET/VALUES expression cast to the recorded type, carries the
@@ -2556,8 +2429,9 @@ object Pipeline {
   // ---------------------------------------------------------------- px117
   /** SQL `MERGE INTO` — px113's sparse upsert driven entirely from SQL:
     * the injected [[org.apache.spark.sql.graft.ResolveLakeMerge]] rule
-    * routes the UPDATE SET star + INSERT star shape onto
-    * [[mergeIntoLakeSparse]], so the statement commits O(matched rows)
+    * lowers the UPDATE SET star + INSERT star shape onto
+    * [[mergeIntoLakeGeneral]] — the executor behind
+    * [[mergeIntoLakeSparse]] too — so the statement commits O(matched rows)
     * tombstones plus the upsert files — zero survivor rewrites — and
     * the post-merge corpus hash-matches px113's relational oracle.
     * LakeSpec pins the SQL-vs-Scala row-for-row equality and the loud
@@ -2691,6 +2565,13 @@ object Pipeline {
     val out = Scratch.dir(spark, "px120_lake")
     val src = Scratch.dir(spark, "px120_src")
     val ckpt = Scratch.dir(spark, "px120_ckpt")
+    // the stream starts from empty dirs: a leftover checkpoint (an earlier
+    // run's, or one holding another checkout's absolute paths) would
+    // resume instead of ingesting this run's files
+    Seq(src, ckpt).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
     val sharded = hashSplit(Tables(spark, dir, "documents"), "doc_id")
       .withColumn("shard_id", (col("doc_id") % 4).cast("int"))
     Lake.init(spark, sharded.filter(col("doc_id") % 3 === 0), out, Seq("split", "shard_id"))

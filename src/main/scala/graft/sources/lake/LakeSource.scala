@@ -228,8 +228,6 @@ trait GraftLakeTable {
   def lakePinned: Boolean
   /** The resolved manifest state this table reads. */
   def lakeManifest: Lake.LakeState
-  /** The lake layout's partition columns (in path order). */
-  def lakePartitionCols: Seq[String] = Lake.partitionColsOf(lakeManifest)
   /** True when this table's OWN DSv2 scan would run in row mode (a
     * DV-bearing or column-mapped resolved version) — the signal the
     * injected [[org.apache.spark.sql.graft.VectorizeLakeMorRead]] rule

@@ -8,8 +8,7 @@ import graft.{GraftSession, SparkEntry}
 
 /** Scratch diagnostic: run ONE registered query and print every Spark
   * job's call site + description, so a query's driver-job budget can be
-  * attributed line by line (the generic successor of [[JobTrace]]'s
-  * hand-rolled px115 decomposition). Not part of any protocol.
+  * attributed line by line. Not part of any protocol.
   *
   *   sbt "runMain graft.tools.JobTraceQ px130_lake_columnar_checkpoint [sfDir]"
   */

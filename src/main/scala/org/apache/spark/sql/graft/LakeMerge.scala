@@ -2,19 +2,20 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, EqualTo, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.expressions.{Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, Project, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.Pipeline
 import graft.sources.lake.GraftLakeTable
 
-/** SQL `MERGE INTO` on a graft-lake table, routed onto the SPARSE
-  * deletion-vector commit paths:
+/** SQL `MERGE INTO` and `UPDATE` on a graft-lake table, routed onto
+  * the SPARSE deletion-vector commit paths. Every MERGE shape lowers
+  * onto ONE executor, [[Pipeline.mergeIntoLakeGeneral]] — the plain
+  * upsert
   *
   * {{{
   *   MERGE INTO corpus t USING updates s ON t.doc_id = s.doc_id
@@ -22,14 +23,15 @@ import graft.sources.lake.GraftLakeTable
   *   WHEN NOT MATCHED THEN INSERT *
   * }}}
   *
-  * lands as ONE `merge` commit through
-  * [[Pipeline.mergeIntoLakeSparse]]: matched pre-image rows tombstone
-  * by deletion vector (zero survivor files rewritten), the upserts land
-  * as genuinely-new data files, the CDC feed sees exactly the changes —
-  * the same O(matched rows) write amplification the Scala path has,
-  * now reachable from SQL/Python. `WHEN MATCHED THEN DELETE` (with no
-  * insert branch) routes to [[Pipeline.deleteFromLakeSparse]] — the
-  * tombstone-id-set form, stats-pruned by the source ids' bounds.
+  * is its one-UPDATE-one-INSERT shape, the same one the Scala
+  * [[Pipeline.mergeIntoLakeSparse]] passes it, and lands as ONE `merge`
+  * commit: matched pre-image rows tombstone by deletion vector (zero
+  * survivor files rewritten), post-images and inserts land as
+  * genuinely-new data files, the CDC feed sees exactly the changes.
+  * The one other route is `WHEN MATCHED THEN DELETE` alone, which
+  * needs no join output and goes to [[Pipeline.deleteFromLakeSparse]]
+  * — the tombstone-id-set form, stats-pruned by the source ids'
+  * bounds.
   *
   * Spark's own `MERGE` rewrite requires `SupportsRowLevelOperations` +
   * a full DSv2 delta-write machinery; this rule instead recognizes the
@@ -37,19 +39,16 @@ import graft.sources.lake.GraftLakeTable
   * analysis (the built-in rewrite ignores non-row-level tables) and
   * replaces it with a driver-routed command — one commit path, no
   * second write protocol. Supported shapes, refused LOUDLY otherwise
-  * (never silently approximated):
-  *
-  *   - condition `t.<id> = s.<expr>` (either side order);
-  *   - `WHEN MATCHED THEN UPDATE SET *` / explicit all-column SET with
-  *     the SAME per-column expressions as the INSERT branch (upsert:
-  *     matched rows are REPLACED by the source row — expressions may
-  *     reference only the source);
-  *   - `WHEN NOT MATCHED THEN INSERT *` / explicit all-column VALUES;
-  *   - or `WHEN MATCHED THEN DELETE` alone.
+  * (never silently approximated): condition `t.<id> = s.<expr>` (either
+  * side order) with any combination of `WHEN MATCHED [AND cond] THEN
+  * UPDATE SET …|DELETE`, `WHEN NOT MATCHED [AND cond] THEN INSERT …` and
+  * `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET …|DELETE`;
+  * no subqueries, no nested-field assignments, no schema evolution.
   *
   * Duplicate source keys dedupe (last-writer-arbitrary) rather than
-  * raising ANSI MERGE's cardinality error — documented divergence, the
-  * upsert semantics of [[Pipeline.mergeIntoLakeSparse]].
+  * raising ANSI MERGE's cardinality error — the documented divergence
+  * of [[Pipeline.mergeIntoLakeGeneral]]; null-key source rows never
+  * match and each inserts.
   */
 class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -130,54 +129,15 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
       case other => refuse(s"condition ${other.sql} is not t.<id> = s.<expr>")
     }
 
-    val lakeSchema = DataType.fromJson(table.lakeManifest.schemaJson)
-      .asInstanceOf[StructType]
-    val partitionCols = table.lakePartitionCols
-
-    /** The full-column source-only assignment map of the FAST upsert
-      * shape, or None when the shape needs the general path. */
-    def fullSourceMap(assigns: Seq[Assignment]): Option[Map[String, Expression]] = {
-      val pairs = assigns.flatMap {
-        case Assignment(k: AttributeReference, v)
-            if targetOut.contains(k) && v.references.subsetOf(sourceOut) &&
-              !SubqueryExpression.hasSubquery(v) =>
-          Some(k.name -> v)
-        case _ => None
-      }
-      val map = pairs.toMap
-      if (pairs.size == assigns.size && lakeSchema.fieldNames.forall(map.contains))
-        Some(map)
-      else None
-    }
-
-    def fastUpsertMap(up: Seq[Assignment],
-        ins: Seq[Assignment]): Option[Map[String, Expression]] =
-      for {
-        uM <- fullSourceMap(up)
-        iM <- fullSourceMap(ins)
-        if lakeSchema.fieldNames.forall(c => uM(c).semanticEquals(iM(c)))
-      } yield uM
-
     (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
-      // FAST upsert: unconditional UPDATE SET * + INSERT * with the same
-      // per-column source expressions — [[Pipeline.mergeIntoLakeSparse]]
-      case (Seq(UpdateAction(None, up, _)), Seq(InsertAction(None, ins)), Seq())
-          if fastUpsertMap(up, ins).isDefined =>
-        val upMap = fastUpsertMap(up, ins).get
-        val projected: Seq[NamedExpression] = lakeSchema.fields.toSeq.map { f =>
-          Alias(Cast(upMap(f.name), f.dataType), f.name)()
-        }
-        LakeMergeIntoCommand(table.lakeDirPath, idAttr.name, partitionCols,
-          Project(projected, m.sourceTable))
-      // FAST pure delete: WHEN MATCHED THEN DELETE alone
+      // pure delete: WHEN MATCHED THEN DELETE alone
       case (Seq(DeleteAction(None)), Seq(), Seq()) =>
         LakeDeleteMatchedCommand(table.lakeDirPath, idAttr.name,
           Project(Seq(Alias(srcIdExpr, idAttr.name)()), m.sourceTable))
-      // GENERAL grammar: conditional clauses, split shapes, partial SET,
-      // WHEN NOT MATCHED BY SOURCE — [[Pipeline.mergeIntoLakeGeneral]]
+      // every other shape, the upsert included — [[Pipeline.mergeIntoLakeGeneral]]
       case (matched, notMatched, nmbs) =>
-        convertGeneral(m, table, idAttr.name, srcIdExpr, partitionCols,
-          lakeSchema, targetOut, sourceOut, matched, notMatched, nmbs)
+        convertGeneral(table, idAttr.name, srcIdExpr, targetOut, sourceOut,
+          matched, notMatched, nmbs, m.sourceTable)
     }
   }
 
@@ -189,13 +149,12 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
     * unambiguously. Scope rules enforced here, refused loudly: insert
     * clauses see only the source, not-matched-by-source clauses only the
     * target; no subqueries anywhere. */
-  private def convertGeneral(m: MergeIntoTable, table: GraftLakeTable,
-      idCol: String, srcIdExpr: Expression, partitionCols: Seq[String],
-      lakeSchema: StructType,
+  private def convertGeneral(table: GraftLakeTable,
+      idCol: String, srcIdExpr: Expression,
       targetOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       sourceOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       matched: Seq[MergeAction], notMatched: Seq[MergeAction],
-      nmbs: Seq[MergeAction]): LogicalPlan = {
+      nmbs: Seq[MergeAction], source: LogicalPlan): LogicalPlan = {
 
     def dis(e: Expression, allowT: Boolean, allowS: Boolean, what: String): Expression = {
       if (SubqueryExpression.hasSubquery(e))
@@ -236,28 +195,12 @@ class ResolveLakeMerge(session: SparkSession) extends Rule[LogicalPlan] {
           delete = false, setsOf(assigns, allowT, allowS, s"$what INSERT"))
       case other => refuse(s"$what action ${other.getClass.getSimpleName} is not supported")
     }
-    LakeMergeGeneralCommand(table.lakeDirPath, idCol, partitionCols,
+    LakeMergeGeneralCommand(table.lakeDirPath, idCol,
       ExprHolder(dis(srcIdExpr, allowT = false, allowS = true, "ON condition")),
       clausesOf(matched, allowT = true, allowS = true, "WHEN MATCHED"),
       clausesOf(notMatched, allowT = false, allowS = true, "WHEN NOT MATCHED"),
       clausesOf(nmbs, allowT = true, allowS = false, "WHEN NOT MATCHED BY SOURCE"),
-      m.sourceTable)
-  }
-}
-
-/** The routed upsert: runs [[Pipeline.mergeIntoLakeSparse]] over the
-  * source projection. A leaf command (the source plan re-enters query
-  * planning inside `run` via `Dataset.ofRows`, getting its own
-  * analysis/optimization pass). */
-case class LakeMergeIntoCommand(lakeDir: String, idCol: String,
-    partitionCols: Seq[String], updates: LogicalPlan) extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = Seq(updates)
-  override def run(session: SparkSession): Seq[Row] = {
-    val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    Pipeline.mergeIntoLakeSparse(classic, lakeDir,
-      org.apache.spark.sql.classic.Dataset.ofRows(classic, updates),
-      idCol, partitionCols)
-    Seq.empty
+      source)
   }
 }
 
@@ -287,8 +230,7 @@ case class GeneralClause(condition: Option[ExprHolder], delete: Boolean,
 
 /** The routed full-grammar MERGE: [[Pipeline.mergeIntoLakeGeneral]]
   * over the source plan, clauses re-bound by name at run time. */
-case class LakeMergeGeneralCommand(lakeDir: String, idCol: String,
-    partitionCols: Seq[String], srcKey: ExprHolder,
+case class LakeMergeGeneralCommand(lakeDir: String, idCol: String, srcKey: ExprHolder,
     matched: Seq[GeneralClause], notMatched: Seq[GeneralClause],
     notMatchedBySource: Seq[GeneralClause],
     source: LogicalPlan) extends LeafRunnableCommand {

@@ -1200,6 +1200,20 @@ class LakeSpec extends SparkTestBase {
         "the matched docs (5 and 200) must be tombstoned")
       val h2 = Lake.describeHistory(spark, out).collect().find(_.getLong(0) == 2L).get
       assert(h2.getString(2) == "delete" && h2.getInt(3) == 0 && h2.getInt(5) == 0)
+      // the same upsert into an EMPTY lake lands every source row as an
+      // insert, exactly as the Scala path's first-ingest append does
+      val empty = freshDir("lake-sql-merge-empty")
+      val emptyRef = freshDir("lake-sql-merge-empty-ref")
+      Lake.init(spark, updates.limit(0), empty, Seq("split", "shard_id"))
+      spark.sql("DROP TABLE IF EXISTS sqlmerge_empty")
+      spark.sql(s"CREATE TABLE sqlmerge_empty USING `graft-lake` OPTIONS (path '$empty')")
+      spark.sql("""MERGE INTO sqlmerge_empty t USING sqlmerge_src s ON t.doc_id = s.doc_id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""")
+      Pipeline.mergeIntoLakeSparse(spark, emptyRef, updates, "doc_id", Seq("split", "shard_id"))
+      assert(corpus(empty) == Set((5L, "patched 5", "train", 1), (200L, "doc 200", "test", 0)),
+        "an upsert into an empty lake must insert every source row")
+      assert(corpus(empty) == corpus(emptyRef))
       // an unsupported ON shape still refuses loudly, naming the contract
       val e = intercept[UnsupportedOperationException] {
         spark.sql("""MERGE INTO sqlmerge t USING sqlmerge_src s ON t.doc_id < s.doc_id
@@ -1209,6 +1223,7 @@ class LakeSpec extends SparkTestBase {
         s"a non-equi ON must refuse with the contract, got: ${e.getMessage}")
     } finally {
       spark.sql("DROP TABLE IF EXISTS sqlmerge")
+      spark.sql("DROP TABLE IF EXISTS sqlmerge_empty")
       spark.catalog.dropTempView("sqlmerge_src")
     }
   }
@@ -2259,8 +2274,11 @@ class LakeSpec extends SparkTestBase {
 
   test("general merge: distinct null-key source rows each INSERT (null never matches, so they are not duplicates)") {
     val out = freshDir("lake-nullkey-merge")
+    val ref = freshDir("lake-nullkey-merge-ref")
     writePlain(fixture(), out)
     Lake.adopt(spark, out)
+    writePlain(fixture(), ref)
+    Lake.adopt(spark, ref)
     spark.sql("DROP TABLE IF EXISTS nkm")
     spark.sql(s"CREATE TABLE nkm USING `graft-lake` OPTIONS (path '$out')")
     Seq((Option.empty[Long], "n1"), (Option.empty[Long], "n2"), (Some(5L), "patched"))
@@ -2275,6 +2293,20 @@ class LakeSpec extends SparkTestBase {
       assert(r.filter(col("doc_id").isNull).select("text").collect()
         .map(_.getString(0)).toSet == Set("n1", "n2"))
       assert(r.filter(col("doc_id") === 5L).select("text").head.getString(0) == "patched")
+      // the Scala upsert is the same executor's upsert shape: the same
+      // full-row source lands the same corpus, null-key rows included
+      val doc5 = Lake.read(spark, ref).filter(col("doc_id") === 5L)
+        .select("split", "shard_id").head
+      Pipeline.mergeIntoLakeSparse(spark, ref,
+        Seq((Option.empty[Long], "n1", "test", 0), (Option.empty[Long], "n2", "test", 0),
+          (Some(5L), "patched", doc5.getString(0), doc5.getInt(1)))
+          .toDF("doc_id", "text", "split", "shard_id"))
+      def corpus(dir: String) = Lake.read(spark, dir)
+        .select("doc_id", "text", "split", "shard_id").collect()
+        .map(row => (Option(row.get(0)), row.getString(1), row.getString(2), row.getInt(3)))
+        .toSet
+      assert(corpus(ref) == corpus(out),
+        "mergeIntoLakeSparse must insert each null-key row, like the SQL MERGE")
     } finally spark.sql("DROP TABLE IF EXISTS nkm")
   }
 
@@ -3768,56 +3800,6 @@ class LakeSpec extends SparkTestBase {
         "the dead file must never come back as a prune survivor")
       assert(Lake.reservedTotals(spark, st, st.files)._1.isDefined,
         "whole-table pricing must not trip its torn check on the raced restate")
-    } finally {
-      spark.conf.unset(Lake.PathLazyMinFilesKey)
-      spark.conf.unset(Lake.CheckpointParquetMinEntriesKey)
-    }
-  }
-
-  test("a LEGACY unfiltered restate (raw AS line) replayed onto a path-lazy base validates against the entries — no resurrection") {
-    spark.conf.set(Lake.CheckpointParquetMinEntriesKey, "8")
-    spark.conf.set(Lake.PathLazyMinFilesKey, "1")
-    try {
-      val out = freshDir("lake-legacy-restate")
-      def batch(ids: Range, split: String) = spark.range(ids.start, ids.end).select(
-        col("id").as("doc_id"), concat(lit("doc "), col("id")).as("text"),
-        lit(split).as("split"))
-      Lake.init(spark, batch(0 until 100, "train")
-        .unionByName(batch(100000 until 100100, "test")), out, Seq("split"))   // v1
-      (1 to 9).foreach(i => Pipeline.appendToLake(spark, out,
-        batch(1000 * i until 1000 * i + 10, "train"),
-        partitionCols = Seq("split")))                                          // v2..v10 (cp)
-      Lake.invalidateStateCache()
-      val stale = Lake.latestManifest(spark, out).get
-      Pipeline.deleteFromLake(spark, out, Seq(5L).toDF("doc_id"), "doc_id",
-        partitionCols = Seq("split"), retainHistory = true)                     // v11
-      Lake.checkpointNow(spark, out) // the removal buries BELOW this cp
-      Lake.invalidateStateCache()
-      val st11 = Lake.latestManifest(spark, out).get
-      val live11 = st11.files.toSet
-      val r = stale.files.find(f => !live11(f)).get // dead below the new cp
-      // hand-write the v12 delta a PRE-FILTER build would have committed:
-      // a raw `AS` restate naming the dead file (no `ASF` producer filter)
-      def e(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      val text = Seq(
-        s"graft-delta-v1\tanalyze\t${System.currentTimeMillis()}",
-        s"S\t${e(st11.schemaJson)}",
-        s"AS\t${e(r)}\t${e("text")}\t${e("a")}\t${e("b")}").mkString("\n")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out,
-        Lake.LogDirName, f"v${12L}%020d.manifest"), text.getBytes("UTF-8"))
-      Lake.invalidateStateCache()
-      val st = Lake.latestManifest(spark, out).get
-      assert(st.files.isInstanceOf[Lake.DeferredFiles])
-      assert(!st.stats.contains(r),
-        "a legacy restate for a file dead below the checkpoint must drop at replay")
-      assert(Lake.read(spark, out).count() == 289L,
-        "the deleted row must stay deleted")
-      val kept = Lake.pruneByStats(st, "text",
-        org.apache.spark.sql.types.StringType, "a", "b")
-      assert(!kept.contains(r),
-        "the dead file must never come back as a prune survivor")
-      assert(Lake.reservedTotals(spark, st, st.files)._1.isDefined,
-        "whole-table pricing must not trip its torn check on the legacy restate")
     } finally {
       spark.conf.unset(Lake.PathLazyMinFilesKey)
       spark.conf.unset(Lake.CheckpointParquetMinEntriesKey)

@@ -53,13 +53,18 @@ class LogCompatSpec extends SparkTestBase {
   }
 
   test("an UNGATED unknown delta tag names the newer-build cause, not a bare MatchError") {
-    val out = freshDir("compat-delta-unknown")
-    writeLog(out, f"v${1L}%020d.manifest",
-      "graft-delta-v1\tappend\t0\t0\t0\t0\t0\t0\nS\t%7B%7D\nZZ\tfuture-payload")
-    val e = intercept[IllegalStateException] { Lake.deltaAt(spark, out, 1L) }
-    assert(e.getMessage.contains("unknown delta line tag 'ZZ'") &&
-      e.getMessage.contains("newer graft build"),
-      s"expected the descriptive unknown-tag error, got: ${e.getMessage}")
+    // `AS` is the retired unfiltered stat-restate tag: no build writes it,
+    // so it refuses like any other tag this reader does not know
+    Seq("ZZ\tfuture-payload", "AS\tf.parquet\ttext\ta\tb").foreach { line =>
+      val tag = line.takeWhile(_ != '\t')
+      val out = freshDir(s"compat-delta-unknown-$tag")
+      writeLog(out, f"v${1L}%020d.manifest",
+        s"graft-delta-v1\tappend\t0\t0\t0\t0\t0\t0\nS\t%7B%7D\n$line")
+      val e = intercept[IllegalStateException] { Lake.deltaAt(spark, out, 1L) }
+      assert(e.getMessage.contains(s"unknown delta line tag '$tag'") &&
+        e.getMessage.contains("newer graft build"),
+        s"expected the descriptive unknown-tag error for $tag, got: ${e.getMessage}")
+    }
   }
 
   test("a level-2 delta (VD lines) stamps mr=2 and replays fine on this build") {

@@ -80,4 +80,29 @@ class CounterGateSpec extends SparkTestBase {
           s"commit, declaring the cost:\n  ${regressions.mkString("\n  ")}")
     }
   }
+
+  test("px120 is hermetic: a second run in the same session ingests afresh, with equal results and jobs") {
+    val sparkJobs = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        sparkJobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val px120 = SparkEntry.queries("px120_lake_stream_sink")
+      def run(): (Seq[org.apache.spark.sql.Row], Long) = {
+        Lake.invalidateStateCache()
+        org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+        val pre = sparkJobs.get()
+        val rows = px120(spark, sf).collect().toSeq
+        org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+        (rows, sparkJobs.get() - pre)
+      }
+      val (rows1, jobs1) = run()
+      val (rows2, jobs2) = run()
+      assert(rows1.nonEmpty && rows1 == rows2,
+        "the second px120 run must ingest the whole corpus again, not resume the first's checkpoint")
+      assert(jobs1 == jobs2, s"px120 launched $jobs1 then $jobs2 Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
