@@ -6926,12 +6926,18 @@ object Lake {
     * scoped off; the prior session value is restored either way. The
     * planning of `df` happens inside the collect (executedPlan is lazy),
     * so the toggle reliably covers it. */
-  private[graft] def collectScalar(df: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val spark = df.sparkSession
+  private[graft] def collectScalar(df: DataFrame): Array[org.apache.spark.sql.Row] =
+    withoutAqe(df.sparkSession)(df.collect())
+
+  /** Run `body` — an action that plans and executes a small bounded
+    * frame — with AQE scoped off, so its exchanges run as stages of ONE
+    * job instead of a job each; the prior session value is restored
+    * either way. */
+  private[graft] def withoutAqe[T](spark: SparkSession)(body: => T): T = {
     val k = "spark.sql.adaptive.enabled"
     val prior = spark.conf.getOption(k)
     spark.conf.set(k, "false")
-    try df.collect()
+    try body
     finally prior match {
       case Some(v) => spark.conf.set(k, v)
       case None => spark.conf.unset(k)

@@ -1671,17 +1671,26 @@ object Pipeline {
     * distinguish 6M longs (~150 MB, broadcastable) from 1M kilobyte
     * string keys (~1 GB, not), not byte-exactness. */
   private[graft] def estimatedIdSetBytes(upd: DataFrame, idCol: String,
-      updCount: Long): Long = {
+      updCount: Long): Long =
+    idSetBytes(upd.schema(idCol).dataType, updCount, {
+      val r = Lake.collectScalar(
+        upd.agg(avg(octet_length(col(idCol).cast("binary")))))(0)
+      if (r.isNullAt(0)) 8.0 else r.getDouble(0)
+    })
+
+  /** rows × (encoded key width + per-row join-build overhead);
+    * `avgWidth` (the mean encoded bytes of a string or binary key) is
+    * evaluated for those types only — fixed-width types price at their
+    * Catalyst default size. */
+  private def idSetBytes(dt: org.apache.spark.sql.types.DataType, rows: Long,
+      avgWidth: => Double): Long = {
     import org.apache.spark.sql.types.{BinaryType, StringType}
     val overhead = 16L // UnsafeRow header + hash-relation slot, roughly
-    val perRow = upd.schema(idCol).dataType match {
-      case StringType | BinaryType =>
-        val r = Lake.collectScalar(
-          upd.agg(avg(octet_length(col(idCol).cast("binary")))))(0)
-        (if (r.isNullAt(0)) 8.0 else r.getDouble(0)).toLong + overhead
-      case dt => dt.defaultSize.toLong + overhead
+    val perRow = dt match {
+      case StringType | BinaryType => avgWidth.toLong + overhead
+      case other => other.defaultSize.toLong + overhead
     }
-    updCount * perRow
+    rows * perRow
   }
 
   /** The lake's visible (user-facing) schema at `base`. */
@@ -2067,8 +2076,10 @@ object Pipeline {
     * not-matched-by-source chain — each as a single codegen'd
     * CASE over the clause conditions, evaluated once over the
     * checkpointed join. With no NOT-MATCHED-BY-SOURCE clause the
-    * target side prunes to the files overlapping the source key range
-    * (manifest stats); with one, every target row is in play by
+    * source materializes once, the target side prunes to the files
+    * overlapping its key range (manifest stats, then blooms) and, within
+    * them, to the rows whose key it holds (a semi-join ahead of the
+    * shuffle); with one, every target row is in play by
     * definition — the same honest full-scan Delta prices that clause
     * at. Duplicate source keys dedupe (last-writer-arbitrary) rather
     * than raising ANSI MERGE's cardinality error — the documented
@@ -2096,7 +2107,7 @@ object Pipeline {
     // cardinality duplicates — each is its own NOT-MATCHED insert. ONE
     // pass: null keys salt the dedup key with a unique id so they all
     // survive the same dropDuplicates that collapses duplicate real keys.
-    val src = source
+    val src0 = source
       .select(source.columns.toSeq.map(c => col(c).as("_s_" + c)): _*)
       .withColumn("_gm_sk", srcKey)
       .withColumn("_gm_nk",
@@ -2104,32 +2115,32 @@ object Pipeline {
       .dropDuplicates("_gm_sk", "_gm_nk")
       .drop("_gm_nk")
       .withColumn("_gm_sp", lit(true))
-    // candidate files: a NOT MATCHED BY SOURCE clause puts every target
-    // row in play; otherwise manifest stats prune to the key range
-    val candidates =
-      if (notMatchedBySource.nonEmpty) base.files
-      else {
-        val b = Lake.collectScalar(src
-          .agg(min(col("_gm_sk")), max(col("_gm_sk")), count(col("_gm_sk"))))(0)
-        if (b.isNullAt(0)) Seq.empty[String]
-        else Lake.bloomPrune(spark, lakeDir, base,
-          Lake.pruneByStats(base, idCol, lakeSchema(idCol).dataType,
-            b.get(0), b.get(1)),
-          idCol, src.filter(col("_gm_sk").isNotNull).select(col("_gm_sk")),
-          b.getLong(2))
-      }
-    val tgt =
-      if (candidates.isEmpty) {
-        val sch = StructType(lakeSchema.fields ++ Seq(
-          StructField("_gf_file", StringType), StructField("_gf_pos", LongType)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      } else Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
-        candidates, base.dvs)
-    val tgtP = tgt.select(
-      lakeSchema.fieldNames.toSeq.map(c => col(c).as("_t_" + c))
-        ++ Seq(col("_gf_file"), col("_gf_pos")): _*)
-      .withColumn("_gm_tp", lit(true))
+    // With no NOT MATCHED BY SOURCE clause the source is read for its key
+    // bounds, the bloom probe keys, the target semi-join and the join, so
+    // it materializes ONCE (eager checkpoint with AQE scoped off, so one
+    // job; the bounds, the key count and a string key's mean width ride
+    // it as observed metrics). A source that reads differently
+    // each time (`limit` after a shuffle, `sample`, a table that changes
+    // between reads) could otherwise prune away the files of keys the
+    // join then sees, inserting those matched rows a second time. With
+    // such a clause the join is the source's only read.
+    val keyType = src0.schema("_gm_sk").dataType
+    val wideKey = keyType match {
+      case StringType | org.apache.spark.sql.types.BinaryType => true
+      case _ => false
+    }
+    val srcCk = if (notMatchedBySource.nonEmpty) None else {
+      val (inst, _, extras) = Lake.observedAuditMetrics(Map.empty, src0,
+        Seq(min(col("_gm_sk")).as("_gf_mn"), max(col("_gm_sk")).as("_gf_mx"),
+          count(col("_gm_sk")).as("_gf_nk")) ++
+          (if (wideKey) Seq(avg(octet_length(col("_gm_sk").cast("binary"))).as("_gf_kw"))
+          else Nil))
+      Some((Lake.withoutAqe(spark)(inst.localCheckpoint(true)), extras()))
+    }
+    val src = srcCk.fold(src0)(_._1)
+    def checkpointRdds(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
     // first-satisfied-clause index (-1 = no clause fires): the SQL
     // clause-order semantics as one codegen'd CASE chain
     def actionOf(clauses: Seq[MergeClause]): org.apache.spark.sql.Column =
@@ -2137,17 +2148,6 @@ object Pipeline {
         case ((cl, i), els) =>
           when(cl.condition.getOrElse(lit(true)), lit(i)).otherwise(els)
       }
-    // ONE bounded materialization feeds the counts, the sidecar write
-    // and both add stages. Eager localCheckpoint, not persist: it
-    // TRUNCATES lineage, so the 4-5 downstream actions plan over a
-    // one-node LogicalRDD instead of re-running Catalyst/AQE over the
-    // full-outer join per action (the r13 persist swap cost 2.4× in
-    // driver fixed costs alone), and the arbitrary-winner dedup +
-    // monotonically_increasing_id upstream can never silently recompute
-    // different winners between the counts, the sidecar and the adds.
-    // Blocks spill MEMORY_AND_DISK (the graceful 100 TB degradation);
-    // the finally below releases them the moment the commit publishes
-    // (no ContextCleaner wait) by unpersisting the checkpoint RDD.
     val mDel = matched.zipWithIndex.collect { case (c, i) if c.delete => i }.toSet
     val nDel = notMatchedBySource.zipWithIndex.collect { case (c, i) if c.delete => i }.toSet
     def inSet(c: org.apache.spark.sql.Column, ids: Set[Int]) =
@@ -2161,28 +2161,80 @@ object Pipeline {
     val addPostCond = (col("_gm_am") >= 0 && !inSet(col("_gm_am"), mDel)) ||
       (col("_gm_an") >= 0 && !inSet(col("_gm_an"), nDel))
     val addInsCond = col("_gm_ai") >= 0
-    // the four per-clause-kind row counts ride the checkpoint's own
-    // materialization as observed metrics — the old separate aggregate
-    // was one more driver job over the just-checkpointed join
-    val (instJoined, _, joinedExtras) = Lake.observedAuditMetrics(Map.empty,
-      tgtP.join(src, col("_t_" + idCol) === col("_gm_sk"), "full_outer")
-        .withColumn("_gm_am",
-          when(col("_gm_tp").isNotNull && col("_gm_sp").isNotNull, actionOf(matched))
-            .otherwise(lit(-1)))
-        .withColumn("_gm_ai",
-          when(col("_gm_tp").isNull && col("_gm_sp").isNotNull, actionOf(notMatched))
-            .otherwise(lit(-1)))
-        .withColumn("_gm_an",
-          when(col("_gm_tp").isNotNull && col("_gm_sp").isNull,
-            actionOf(notMatchedBySource)).otherwise(lit(-1))),
-      Seq(sum(when(tombDelCond, 1L).otherwise(0L)).as("_gf_tdel"),
-        sum(when(tombUpdCond, 1L).otherwise(0L)).as("_gf_tupd"),
-        sum(when(addPostCond, 1L).otherwise(0L)).as("_gf_apost"),
-        sum(when(addInsCond, 1L).otherwise(0L)).as("_gf_ains")))
-    val joined = instJoined.localCheckpoint(true)
-    val cpRdds = joined.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+    // ONE bounded materialization feeds the counts, the sidecar write
+    // and both add stages. Eager localCheckpoint, not persist: it
+    // TRUNCATES lineage, so the 4-5 downstream actions plan over a
+    // one-node LogicalRDD instead of re-running Catalyst/AQE over the
+    // full-outer join per action (the r13 persist swap cost 2.4× in
+    // driver fixed costs alone), and the arbitrary-winner dedup +
+    // monotonically_increasing_id upstream can never silently recompute
+    // different winners between the counts, the sidecar and the adds.
+    // Blocks spill MEMORY_AND_DISK (the graceful 100 TB degradation);
+    // the source checkpoint is released once the join is materialized,
+    // the join's the moment the commit publishes (no ContextCleaner
+    // wait), by unpersisting the checkpoint RDDs.
+    val (joined, joinedExtras) = try {
+      // candidate files: a NOT MATCHED BY SOURCE clause puts every target
+      // row in play; otherwise manifest stats prune to the key range
+      val candidates = srcCk match {
+        case None => base.files
+        case Some((_, b)) =>
+          if (b("_gf_mn") == null) Seq.empty[String]
+          else Lake.bloomPrune(spark, lakeDir, base,
+            Lake.pruneByStats(base, idCol, lakeSchema(idCol).dataType,
+              b("_gf_mn"), b("_gf_mx")),
+            idCol, src.filter(col("_gm_sk").isNotNull).select(col("_gm_sk")),
+            b("_gf_nk").asInstanceOf[Long])
+      }
+      val tgt =
+        if (candidates.isEmpty) {
+          val sch = StructType(lakeSchema.fields ++ Seq(
+            StructField("_gf_file", StringType), StructField("_gf_pos", LongType)))
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+        } else Lake.readFilesWithLineage(spark, lakeDir, base.schemaJson,
+          candidates, base.dvs)
+      val tgtP = tgt.select(
+        lakeSchema.fieldNames.toSeq.map(c => col(c).as("_t_" + c))
+          ++ Seq(col("_gf_file"), col("_gf_pos")): _*)
+        .withColumn("_gm_tp", lit(true))
+      // without a NOT MATCHED BY SOURCE clause a target row takes part
+      // only if its key is a source key: a semi-join against the key set
+      // (broadcast while it plausibly fits executor memory) drops the
+      // rest BEFORE the full-outer join shuffles and checkpoints whole
+      // rows, so a scattered-key upsert moves O(matched) target rows
+      // even where the key range covers the whole lake
+      val tgtIn = srcCk match {
+        case Some((_, b)) if candidates.nonEmpty =>
+          val nk = b("_gf_nk").asInstanceOf[Long]
+          val keys = src.filter(col("_gm_sk").isNotNull).select(col("_gm_sk").as("_gm_k"))
+          val keyBytes = idSetBytes(keyType, nk,
+            Option(b.getOrElse("_gf_kw", null)).fold(8.0)(_.asInstanceOf[Double]))
+          tgtP.join(if (keyBytes <= MergeBroadcastMaxBytes) broadcast(keys) else keys,
+            col("_t_" + idCol) === col("_gm_k"), "left_semi")
+        case _ => tgtP
+      }
+      // the four per-clause-kind row counts ride the checkpoint's own
+      // materialization as observed metrics — the old separate aggregate
+      // was one more driver job over the just-checkpointed join
+      val (instJoined, _, extras) = Lake.observedAuditMetrics(Map.empty,
+        tgtIn.join(src, col("_t_" + idCol) === col("_gm_sk"), "full_outer")
+          .withColumn("_gm_am",
+            when(col("_gm_tp").isNotNull && col("_gm_sp").isNotNull, actionOf(matched))
+              .otherwise(lit(-1)))
+          .withColumn("_gm_ai",
+            when(col("_gm_tp").isNull && col("_gm_sp").isNotNull, actionOf(notMatched))
+              .otherwise(lit(-1)))
+          .withColumn("_gm_an",
+            when(col("_gm_tp").isNotNull && col("_gm_sp").isNull,
+              actionOf(notMatchedBySource)).otherwise(lit(-1))),
+        Seq(sum(when(tombDelCond, 1L).otherwise(0L)).as("_gf_tdel"),
+          sum(when(tombUpdCond, 1L).otherwise(0L)).as("_gf_tupd"),
+          sum(when(addPostCond, 1L).otherwise(0L)).as("_gf_apost"),
+          sum(when(addInsCond, 1L).otherwise(0L)).as("_gf_ains")))
+      (instJoined.localCheckpoint(true), extras)
+    } finally srcCk.foreach(c => checkpointRdds(c._1).foreach(_.unpersist(blocking = false)))
+    val cpRdds = checkpointRdds(joined)
     try {
     val counts = joinedExtras()
     def cnt(k: String): Long =
@@ -2565,13 +2617,11 @@ object Pipeline {
     val out = Scratch.dir(spark, "px120_lake")
     val src = Scratch.dir(spark, "px120_src")
     val ckpt = Scratch.dir(spark, "px120_ckpt")
-    // the stream starts from empty dirs: a leftover checkpoint (an earlier
-    // run's, or one holding another checkout's absolute paths) would
-    // resume instead of ingesting this run's files
-    Seq(src, ckpt).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
+    // the stream starts from an empty checkpoint: a leftover one (an
+    // earlier run's, or one holding another checkout's absolute paths)
+    // would resume instead of ingesting this run's files
+    val ckptPath = new org.apache.hadoop.fs.Path(ckpt)
+    ckptPath.getFileSystem(spark.sessionState.newHadoopConf()).delete(ckptPath, true)
     val sharded = hashSplit(Tables(spark, dir, "documents"), "doc_id")
       .withColumn("shard_id", (col("doc_id") % 4).cast("int"))
     Lake.init(spark, sharded.filter(col("doc_id") % 3 === 0), out, Seq("split", "shard_id"))

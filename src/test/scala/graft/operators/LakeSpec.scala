@@ -2310,6 +2310,29 @@ class LakeSpec extends SparkTestBase {
     } finally spark.sql("DROP TABLE IF EXISTS nkm")
   }
 
+  test("sparse merge of a source that reads differently each time: the pruned files and the join see the same keys") {
+    val out = freshDir("lake-nondet-merge")
+    Lake.init(spark, fixture(), out, Seq("split", "shard_id"), statsCols = Seq("doc_id"))
+    // the first read of the source yields doc 2 (a train file's id range),
+    // every later read doc 22 (a test file's): bounds and bloom keys taken
+    // from one read and the join from another would prune doc 22's file
+    // away and insert it as a second doc 22
+    val schema = fixture().schema
+    NondetSourceReads.n.set(0)
+    val source = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+        Iterator(
+          if (NondetSourceReads.n.getAndIncrement() == 0)
+            org.apache.spark.sql.Row(2L, "patched", "train", 0)
+          else org.apache.spark.sql.Row(22L, "patched", "test", 0))
+      }, schema)
+    Pipeline.mergeIntoLakeSparse(spark, out, source)
+    val r = Lake.read(spark, out)
+    assert(r.count() == 40L, "an upsert of one existing key must not grow the lake")
+    assert(r.select("doc_id").distinct().count() == 40L, "no key may land twice")
+    assert(r.filter(col("text") === "patched").count() == 1L)
+  }
+
   test("changeFeed folds the prior state forward: log reads stay O(range + checkpoint interval)") {
     val out = freshDir("lake-feed-fold")
     writePlain(fixture(), out)
@@ -4729,4 +4752,10 @@ class LakeSpec extends SparkTestBase {
       spark.conf.unset(Lake.CheckpointParquetMinEntriesKey)
     }
   }
+}
+
+/** Counts the reads of [[LakeSpec]]'s changing merge source (executors
+  * share the driver JVM under the local master). */
+private object NondetSourceReads {
+  val n = new java.util.concurrent.atomic.AtomicInteger(0)
 }

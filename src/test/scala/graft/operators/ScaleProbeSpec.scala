@@ -413,6 +413,62 @@ class ScaleProbeSpec extends SparkTestBase {
     assert(after.filter(col("text") === "UPDATED").count() == 50)
   }
 
+  /** The sparse merge's target side at scale: a scattered-key upsert
+    * (the corpus-wide re-score shape) into a lake that blooms nothing and
+    * whose every file spans the whole id range, so no candidate file
+    * prunes. Without a NOT MATCHED BY SOURCE clause only the target rows
+    * whose key the source holds take part, so the merge's shuffle tracks
+    * the fixed batch, not the lake it scans. */
+  test("sparse merge: a scattered-key upsert into an unbloomed 10x lake shuffles O(batch), not O(lake)") {
+    assume(sys.env.get("GRAFT_SCALE").contains("1"), "set GRAFT_SCALE=1 to run")
+    val sfDir = sys.env.getOrElse("GRAFT_SCALE_SF", "/root/testdata/sf0.1")
+    val base = Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"), lit("train").as("split"))
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      var bytes = Map.empty[Int, Long]
+      for (k <- Seq(1, 10)) {
+        val out = java.nio.file.Files.createTempDirectory(s"probe-upsert$k").toString + "/lake"
+        val docs = (0 until k)
+          .map(i => base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
+          .reduce(_ unionByName _)
+        Lake.init(spark, docs.repartition(8 * k), out, Seq("split"), statsCols = Seq("doc_id"))
+        val lakeRows = Lake.read(spark, out).count()
+        // 500 existing keys hash-scattered over every replica, 500 new ones
+        val batch = Lake.read(spark, out).orderBy(xxhash64(col("doc_id"))).limit(500)
+          .withColumn("text", lit("UPDATED"))
+          .unionByName(base.limit(500).withColumn("doc_id", col("doc_id") + lit(900000000L)))
+          .localCheckpoint()
+        org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+        shuffled.set(0L)
+        spilled.set(0L)
+        val t0 = System.nanoTime()
+        Pipeline.mergeIntoLakeSparse(spark, out, batch)
+        val sec = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+        bytes += k -> shuffled.get()
+        info(f"k=$k lake=$lakeRows files=${Lake.currentState(spark, out).files.size} " +
+          f"merge=$sec%.1fs shuffle=${shuffled.get() / 1e6}%.2fMB " +
+          f"spill=${spilled.get() / 1e6}%.2fMB")
+        val after = Lake.read(spark, out)
+        assert(after.count() == lakeRows + 500L)
+        assert(after.filter(col("text") === "UPDATED").count() == 500L)
+      }
+      assert(bytes(10) < bytes(1) * 3,
+        s"merge shuffle grew ${bytes(10)} / ${bytes(1)} bytes at 10x lake — " +
+          "the target side is no longer cut to the source keys")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("join-shaped bloom probe: a >4M-key probe into a bloomed scattered lake keeps O(matching) files, keys never collected") {
     assume(sys.env.get("GRAFT_SCALE").contains("1"), "set GRAFT_SCALE=1 to run")
     val out = java.nio.file.Files.createTempDirectory("lake-bloom-join-scale").toString + "/lake"
